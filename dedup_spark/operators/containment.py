@@ -169,7 +169,8 @@ def containment_candidates(
     gram_df: DataFrame,
     cfg: PipelineConfig = DEFAULT_CONFIG,
     group_cap: int = 1000,
-    n_docs_hint: int | None = None,
+    *,
+    n_docs_hint: int,
 ) -> tuple[DataFrame, DataFrame]:
     """→ (group membership rows, skipped-group log).
 
@@ -186,20 +187,12 @@ def containment_candidates(
     (10^10+ docs — a broadcast of tens of GB would die at plan time) the
     hint is dropped and the same join runs as a plain shuffled semi-join:
     identical output, one extra shuffle of the index. The gate bounds
-    anchor rows from above — by ``n_docs_hint`` (≤ 1 anchor per doc) when
-    the caller supplies it, else by counting anchor rows on the
-    caller-materialized gram_df; distinct keys ≤ rows either way, so the
+    anchor rows from above by the doc count ``n_docs_hint`` (≤ 1 anchor per
+    doc, so no scan of the index is needed); distinct keys ≤ rows, so the
     gate is conservative (it can only fall back to the shuffle plan early,
     never broadcast something oversized).
     """
-    anchors = gram_df.where("is_anchor")
-    anchor_keys = anchors.select("gram").distinct()
-    if n_docs_hint is None:
-        # anchors ≤ 1 per doc, so the doc count bounds the broadcast size
-        # from above without scanning the 150M-row index (the old
-        # anchors.count() action cost ~8 s per arm at n=6.4M); sigs is a
-        # committed stage table, so its count is a footer-metadata job
-        n_docs_hint = gram_df.where("is_anchor").count()
+    anchor_keys = gram_df.where("is_anchor").select("gram").distinct()
     if n_docs_hint <= cfg.containment_broadcast_max:
         anchor_keys = F.broadcast(anchor_keys)
     # checkpoint the PRUNED membership (a small fraction of the index): it

@@ -9,19 +9,8 @@ is the bit-identical Python twin used by the oracle.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def content_digest_col() -> Column:
-    return F.sha2(
-        F.concat(F.col("bytes"), F.lit(b"\x00"), F.encode(F.col("caption"), "utf-8")),
-        256,
-    )
-
-
-def with_digest(df: DataFrame) -> DataFrame:
-    return df.withColumn("sha256", content_digest_col())
 
 
 def exact_clusters(sigs: DataFrame) -> DataFrame:

@@ -173,9 +173,7 @@ def _bucket_edges(ids: np.ndarray, hv: np.ndarray, thr: int,
 
 
 def hamming_family_pairs(
-    salted_bands: DataFrame,
-    thresholds: dict[str, int] | None = None,
-    cfg: PipelineConfig = DEFAULT_CONFIG,
+    salted_bands: DataFrame, cfg: PipelineConfig = DEFAULT_CONFIG
 ) -> DataFrame:
     """salted band rows (hamming families) → verified
     (a, b, family, hamming, spanning).
@@ -184,11 +182,10 @@ def hamming_family_pairs(
     its smallest distance once (and that row's spanning flag — False
     whenever any band verified the pair directly).
     """
-    if thresholds is None:
-        thresholds = {
-            "simhash": cfg.simhash_hamming_max,
-            "phash": cfg.phash_hamming_max,
-        }
+    thresholds = {
+        "simhash": cfg.simhash_hamming_max,
+        "phash": cfg.phash_hamming_max,
+    }
     fams = sorted(thresholds)
     src = salted_bands.where(F.col("family").isin(fams)).select(
         *_KEY, "image_id", "hval"

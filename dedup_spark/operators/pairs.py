@@ -1,8 +1,7 @@
 """Candidate pair generation (SURVEY.md §2 B19/B20).
 
-Default strategy — ``star`` (scale path): within every salted band bucket,
-each member emits ONE edge to the bucket minimum, and salted sub-bucket
-minima link to the bucket minimum. Per band this is O(n) candidates total,
+Star edges: within every salted band bucket, each member emits ONE edge to
+the bucket minimum, and salted sub-bucket minima link to the bucket minimum. Per band this is O(n) candidates total,
 independent of how big any true duplicate cluster is; an all-pairs bucket
 join is quadratic in cluster size *even under a bucket cap*, because a
 mega-cluster of k boilerplate captions splits into many mid-size buckets in
@@ -15,9 +14,6 @@ min happens to be an unrelated collision loses that one bucket's link) is
 bounded by the other bands/families and asserted ≥ 0.99 by the golden gate.
 This mirrors the standard production MinHash-LSH dedup layout (group by band
 hash → edge to group representative).
-
-``all_pairs`` keeps the exact in-bucket self-join (a < b) for small-scale
-exhaustive comparisons and tests.
 
 Cross-family/band dedup → distinct (a, b): a pair found by 16 bands still
 verifies exactly once (map-side combine collapses duplicates pre-shuffle).
@@ -32,7 +28,7 @@ _KEY = ["family", "band_idx", "band_key"]
 _SKEY = [*_KEY, "salt"]
 
 
-def _star_pairs(salted_bands: DataFrame) -> DataFrame:
+def candidate_pairs(salted_bands: DataFrame) -> DataFrame:
     sub = Window.partitionBy(*_SKEY)
     starred = salted_bands.withColumn("rep", F.min("image_id").over(sub))
     member_edges = starred.where(F.col("image_id") != F.col("rep")).select(
@@ -46,30 +42,14 @@ def _star_pairs(salted_bands: DataFrame) -> DataFrame:
         .where(F.col("rep") != F.col("root"))
         .select(F.col("root").alias("a"), F.col("rep").alias("b"))
     )
-    return member_edges.unionByName(rep_edges)
-
-
-def _all_pairs(salted_bands: DataFrame) -> DataFrame:
-    x = salted_bands.select(*_SKEY, F.col("image_id").alias("a"))
-    y = salted_bands.select(*_SKEY, F.col("image_id").alias("b"))
-    return (
-        x.join(y, _SKEY, "inner")
-        .where(F.col("a") < F.col("b"))
-        .select("a", "b")
-    )
-
-
-def candidate_pairs(salted_bands: DataFrame, strategy: str = "star") -> DataFrame:
-    df = salted_bands.drop("hot") if "hot" in salted_bands.columns else salted_bands
-    pairs = _star_pairs(df) if strategy == "star" else _all_pairs(df)
-    return pairs.dropDuplicates(["a", "b"])
+    return member_edges.unionByName(rep_edges).dropDuplicates(["a", "b"])
 
 
 def orphan_rescue_pairs(
     salted_bands: DataFrame,
     verified: DataFrame,
+    node_ids: DataFrame,
     per_orphan_cap: int = 4096,
-    node_ids: DataFrame | None = None,
 ) -> DataFrame:
     """Second-chance candidates for rows the star pass failed to link.
 
@@ -95,6 +75,10 @@ def orphan_rescue_pairs(
     back with one semi-join (AQE broadcasts the small orphan set); singleton
     sub-buckets need no pre-filter — they cannot produce an (o != m) pair in
     the member join. The big table crosses the wire once, on the bucket key.
+
+    ``node_ids`` is the distinct image_id list the caller already holds
+    (the signature ids: every signature emits >= 1 band row, so the sets
+    agree), which saves a hash-aggregate pass over the fat salted table.
     """
     ok = verified.where("verified")
     linked = (
@@ -102,22 +86,11 @@ def orphan_rescue_pairs(
         .unionByName(ok.select(F.col("b").alias("image_id")))
         .distinct()
     )
-    df = salted_bands.drop("hot") if "hot" in salted_bands.columns else salted_bands
-    # r4: when the caller already holds the distinct node list (t_sigs ids —
-    # every signature emits >=1 band row, so the sets are identical), use it
-    # and skip a full hash-aggregate pass over the fat salted table (~50M
-    # band rows per 3.2M images; the agg is map-side combined but still
-    # scans and hashes every row — measured ~15-20 s of t_rescued at 16c)
-    universe = (
-        node_ids.select("image_id")
-        if node_ids is not None
-        else df.select("image_id").distinct()
-    )
-    orphan_ids = universe.join(linked, "image_id", "left_anti")
-    orphans = df.join(orphan_ids, "image_id", "leftsemi").select(
+    orphan_ids = node_ids.select("image_id").join(linked, "image_id", "left_anti")
+    orphans = salted_bands.join(orphan_ids, "image_id", "leftsemi").select(
         *_SKEY, F.col("image_id").alias("o")
     )
-    members = df.select(*_SKEY, F.col("image_id").alias("m"))
+    members = salted_bands.select(*_SKEY, F.col("image_id").alias("m"))
     cand = (
         orphans.join(members, _SKEY)
         .where(F.col("o") != F.col("m"))

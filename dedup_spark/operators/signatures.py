@@ -14,7 +14,6 @@ from __future__ import annotations
 import hashlib
 from typing import Iterator
 
-import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -119,15 +118,8 @@ def compute_signatures(
     return src.mapInPandas(run, schema=SIG_SCHEMA)
 
 
-def signatures_slim(sigs: DataFrame) -> DataFrame:
-    """Drop the shingle array for stages that only need fixed-width columns."""
-    return sigs.select(
-        "image_id", "sha256", "n_shingles", "minhash_bands", "simhash", "phash", "depth"
-    )
-
-
 def depth_col(c: str = "image_id") -> F.Column:
     return F.size(F.split(F.col(c), "/")) - F.lit(1)
 
 
-__all__ = ["compute_signatures", "signatures_slim", "SIG_SCHEMA", "depth_col"]
+__all__ = ["compute_signatures", "SIG_SCHEMA", "depth_col"]

@@ -49,10 +49,6 @@ _KEY = ["family", "band_idx", "band_key"]
 HAMMING_FAMILIES = ("simhash", "phash")
 
 
-def bucket_census(bands: DataFrame) -> DataFrame:
-    return bands.groupBy(*_KEY).agg(F.count("*").alias("bucket_size"))
-
-
 def _fanout_col(cfg: PipelineConfig):
     raw = F.ceil(F.col("bucket_size") / cfg.bucket_cap).cast("int")
     return F.when(F.col("bucket_size") <= cfg.bucket_cap, F.lit(1)).otherwise(
@@ -88,9 +84,8 @@ def salted_bands(
                 F.pmod(F.xxhash64("image_id"), F.col("fanout")).cast("int"),
             ).otherwise(F.lit(0)),
         )
-        # `hot` tells pair generation to switch from the quadratic in-bucket
-        # self-join to linear star edges (operators.pairs) — a mega-cluster of
-        # k boilerplate captions must cost O(k) candidates, not O(k^2/fanout)
+        # `hot` marks the salted buckets; only the skew report reads it
+        # (pair generation is star edges for every bucket, operators.pairs)
         .withColumn("hot", F.col("bucket_size") > cfg.bucket_cap)
         .drop("bucket_size", "fanout")
     )

@@ -125,9 +125,8 @@ def text_dedup_clusters(
     salted, _ = skew.salted_bands(bands, cfg)
     # consumed by the hamming verifier, star pass and orphan rescue
     salted = salted.localCheckpoint()
-    ham = hamming_family_pairs(
-        salted, {"simhash": cfg.simhash_hamming_max}, cfg
-    ).localCheckpoint()
+    # the text band table has no phash rows: only simhash verifies here
+    ham = hamming_family_pairs(salted, cfg).localCheckpoint()
     mh_salted = salted.where(F.col("family") == "minhash")
     cand = pairs_op.candidate_pairs(mh_salted)
     verified = text_verify(cand, sigs, cfg).localCheckpoint()
@@ -135,8 +134,8 @@ def text_dedup_clusters(
         ham.select("a", "b", F.lit(True).alias("verified"))
     )
     rescued = rescue_verify_pairs(
-        pairs_op.orphan_rescue_pairs(mh_salted, judged), sigs, cfg,
-        use_phash=False,
+        pairs_op.orphan_rescue_pairs(mh_salted, judged, sigs.select("image_id")),
+        sigs, cfg, use_phash=False,
     )
     edges = (
         verified.where("verified").select("a", "b")

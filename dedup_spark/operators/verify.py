@@ -24,12 +24,18 @@ from dedup_spark.config import DEFAULT_CONFIG, PipelineConfig
 
 log = logging.getLogger(__name__)
 
+# phase-2 gate: simhash distance above which J >= threshold is implausible
+SIMHASH_SLACK = 24
+_OUT = [
+    "a", "b", "jaccard", "hamming_sim", "hamming_ph",
+    "f_exact", "f_minhash", "f_simhash", "f_phash", "verified",
+]
+
 
 def verify_pairs(
     pairs: DataFrame,
     sigs: DataFrame,
     cfg: PipelineConfig = DEFAULT_CONFIG,
-    simhash_slack: int = 24,
     census: dict | None = None,
 ) -> DataFrame:
     """Two-phase (r2): the shingle ARRAYS are the fat column of the sigs
@@ -39,16 +45,25 @@ def verify_pairs(
     Phase 1 joins only fixed-width columns and decides exact/simhash/phash;
     phase 2 joins the arrays ONLY for pairs whose simhash distance makes
     J >= threshold statistically possible (E[d] ≈ 10, sd ≈ 3 at J = 0.8;
-    ``simhash_slack`` = +5 sd) — the same layout rescue_verify_pairs uses.
-    Implausible pairs report jaccard 0.0 (they cannot pass the threshold);
-    all family decisions are unchanged.
+    ``SIMHASH_SLACK`` = +5 sd). Implausible pairs report jaccard 0.0 (they
+    cannot pass the threshold); all family decisions are unchanged.
 
     The slack gate is an approximation (simhash is a random projection: a
     true J >= threshold pair with an atypical shingle count can land beyond
     +5 sd), so its skip count is CENSUSED — one cheap count over the
     checkpointed phase-1 frame, logged like the salting loss census
     (operators.skew) — rather than silently assumed negligible (ADVICE r2).
+    ``census["slack_skips"]`` accumulates over calls, so one dict can count
+    a verify round and its rescue round together.
     """
+    return _verify(pairs, sigs, cfg, census).select(*_OUT)
+
+
+def _verify(
+    pairs: DataFrame, sigs: DataFrame, cfg: PipelineConfig, census: dict | None
+) -> DataFrame:
+    """verify_pairs plus its ``plausible`` column (the pair reached the
+    exact-Jaccard phase)."""
     slim = sigs.select("image_id", "sha256", "n_shingles", "simhash", "phash")
     sa = slim.select(
         F.col("image_id").alias("a"), F.col("sha256").alias("sha_a"),
@@ -67,29 +82,31 @@ def verify_pairs(
         .withColumn("hamming_ph", F.bit_count(F.expr("ph_a ^ ph_b")).cast("int"))
         .withColumn("f_exact", F.col("sha_a") == F.col("sha_b"))
         .withColumn("both_captioned", both_captioned)
+        .withColumn(
+            "plausible", both_captioned & (F.col("hamming_sim") <= SIMHASH_SLACK)
+        )
         .select(
-            "a", "b", "hamming_sim", "hamming_ph", "f_exact", "both_captioned"
+            "a", "b", "hamming_sim", "hamming_ph", "f_exact", "both_captioned",
+            "plausible",
         )
         .localCheckpoint()  # consumed twice: plausible filter + final join
     )
 
     n_slack_skipped = cheap.where(
-        F.col("both_captioned") & (F.col("hamming_sim") > simhash_slack)
+        F.col("both_captioned") & ~F.col("plausible")
     ).count()
     if census is not None:
         # out-param so the pipeline can persist the census into t_metrics
         # (VERDICT r3 #5: logs die with the driver; metrics rows survive)
-        census["slack_skips"] = int(n_slack_skipped)
+        census["slack_skips"] = census.get("slack_skips", 0) + int(n_slack_skipped)
     if n_slack_skipped:
         log.warning(
             "verify slack gate: %d captioned pairs skipped Jaccard verify "
             "(simhash distance > %d); their jaccard reports 0.0",
-            n_slack_skipped, simhash_slack,
+            n_slack_skipped, SIMHASH_SLACK,
         )
 
-    maybe = cheap.where(
-        F.col("both_captioned") & (F.col("hamming_sim") <= simhash_slack)
-    ).select("a", "b")
+    maybe = cheap.where("plausible").select("a", "b")
     aa = sigs.select(
         F.col("image_id").alias("a"), F.col("shingles").alias("sh_a"),
         F.col("n_shingles").alias("ns_a"),
@@ -124,13 +141,9 @@ def verify_pairs(
             "f_phash", F.col("hamming_ph") <= F.lit(cfg.phash_hamming_max)
         )
     )
-    out = out.withColumn(
+    return out.withColumn(
         "verified",
         F.col("f_exact") | F.col("f_minhash") | F.col("f_simhash") | F.col("f_phash"),
-    )
-    return out.select(
-        "a", "b", "jaccard", "hamming_sim", "hamming_ph",
-        "f_exact", "f_minhash", "f_simhash", "f_phash", "verified",
     )
 
 
@@ -142,54 +155,22 @@ def rescue_verify_pairs(
     pairs: DataFrame,
     sigs: DataFrame,
     cfg: PipelineConfig = DEFAULT_CONFIG,
-    simhash_slack: int = 24,
     use_phash: bool = True,
+    census: dict | None = None,
 ) -> DataFrame:
-    """Verification sized for the rescue pass's candidate volume.
-
-    Rescue candidates are dominated by random band-key collisions, so the
-    full verify join — which ships each side's shingle ARRAY — would move
-    ~20× more shuffle bytes than needed to reject them. Two phases instead:
-
-    1. join only fixed-width columns (sha256, simhash, phash: ~3 longs/row)
-       and decide the exact / simhash / phash families exactly;
-    2. the Jaccard family can't be decided without arrays, but J >= 0.8
-       implies a tightly concentrated simhash distance (E[d] ~ 10, sd ~ 3
-       at 64 bits), so only pairs with simhash Hamming <= ``simhash_slack``
-       (generous +5 sd) proceed to the full array verify — a ~0.3% residue
-       of random pairs (E[d] = 32) — and the rest are rejected without ever
-       touching an array.
-
-    Output schema: (a, b, verified) — the edge union consumes exactly that.
-    """
-    slim = sigs.select("image_id", "sha256", "n_shingles", "simhash", "phash")
-    sa = slim.select(
-        F.col("image_id").alias("a"), F.col("sha256").alias("sha_a"),
-        F.col("n_shingles").alias("ns_a"), F.col("simhash").alias("sim_a"),
-        F.col("phash").alias("ph_a"),
-    )
-    sb = slim.select(
-        F.col("image_id").alias("b"), F.col("sha256").alias("sha_b"),
-        F.col("n_shingles").alias("ns_b"), F.col("simhash").alias("sim_b"),
-        F.col("phash").alias("ph_b"),
-    )
-    j = pairs.join(sa, "a").join(sb, "b")
-    both_captioned = (F.col("ns_a") > 0) & (F.col("ns_b") > 0)
-    ham_sim = F.bit_count(F.expr("sim_a ^ sim_b"))
-    ham_ph = F.bit_count(F.expr("ph_a ^ ph_b"))
-    cheap_pass = (F.col("sha_a") == F.col("sha_b")) | (
-        both_captioned & (ham_sim <= F.lit(cfg.simhash_hamming_max))
-    )
+    """Verification of the orphan-rescue round: verify_pairs, keeping only
+    the pairs it DECIDED — a cheap family passed (exact, simhash, and phash
+    when ``use_phash``) or the slack gate let the pair reach the exact
+    Jaccard. Rescue candidates are dominated by random band-key collisions,
+    so the rest (rejected by the gate without touching a shingle array) are
+    dropped rather than reported unverified. Same columns as verify_pairs,
+    with ``verified`` following ``use_phash``."""
+    v = _verify(pairs, sigs, cfg, census)
+    cheap = F.col("f_exact") | F.col("f_simhash")
     if use_phash:
-        cheap_pass = cheap_pass | (ham_ph <= F.lit(cfg.phash_hamming_max))
-    j = j.withColumn("cheap_pass", cheap_pass).withColumn(
-        "jaccard_plausible",
-        ~cheap_pass & both_captioned & (ham_sim <= F.lit(simhash_slack)),
+        cheap = cheap | F.col("f_phash")
+    return (
+        v.where(cheap | F.col("plausible"))
+        .withColumn("verified", cheap | F.col("f_minhash"))
+        .select(*_OUT)
     )
-    direct = j.where("cheap_pass").select(
-        "a", "b", F.lit(True).alias("verified")
-    )
-    maybe = j.where("jaccard_plausible").select("a", "b")
-    full = verify_pairs(maybe, sigs, cfg)
-    jac = full.select("a", "b", F.col("f_minhash").alias("verified"))
-    return direct.unionByName(jac)

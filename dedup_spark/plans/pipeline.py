@@ -8,16 +8,24 @@ run_id resumes mid-pipeline (BASELINE.json:14), verified by tests/test_resume.
 
 Stage graph (materialized checkpoints only; banding / exact edges / star
 pairs / dir digests are views recomputed from their checkpointed parent —
-cheaper than a materialization barrier):
+cheaper than a materialization barrier). t_verified holds round one of the
+minhash/containment verify plus the orphan-rescue round, whose "judged" set
+also reads t_hamming and the exact edges; t_clusters unions the verified,
+Hamming, exact and containment edges:
 
-  images ─ t_sigs ─┬─ t_salted ──────(star pairs)──┐
-   (validity fused)├─(exact edges)───────────────── ├─ t_verified ─ t_rescued
-                   └─ t_containment ────────────────┘        │
-     t_clusters ── t_winners ── t_report ◄── t_dup_dirs ◄────┘
+  images ─ t_sigs ─┬─ t_salted ─┬─ t_hamming ─────────────────┐
+  (validity fused) │            └─(star pairs)──┐             │
+                   ├─ t_containment_skipped     ├─ t_verified ┼─ t_clusters
+                   ├─ t_containment ────────────┘             │      │
+                   ├─(exact edges)────────────────────────────┘  t_winners
+                   └─ t_dup_dirs ─────────────────────────── t_report ◄┘
+
+Leaf diagnostics on the async pool: t_invalid, t_skew_report, t_dir_report.
 """
 
 from __future__ import annotations
 
+import functools
 import logging
 import time
 from concurrent.futures import CancelledError, ThreadPoolExecutor
@@ -39,9 +47,6 @@ log = logging.getLogger("dedup_spark.pipeline")
 class PipelineRun:
     store: ParquetStore
     results: list[StageResult] = field(default_factory=list)
-
-    def ran(self, name: str) -> bool:
-        return any(r.name == name and not r.skipped for r in self.results)
 
 
 def run_pipeline(
@@ -93,27 +98,11 @@ def run_pipeline(
     store = make_store(spark, store_root, run_id, fp)
     run = PipelineRun(store=store)
 
-    def stage(name: str, compute, census=None, census_on_skip=True) -> DataFrame:
+    def stage(name: str, compute, census=None) -> DataFrame:
         """``census=(census_name, fn)``: fn(committed_df, rows) is recorded
         into t_metrics by store.write BEFORE the manifest rename, so a done
-        stage always has its approximation census (ADVICE r4). On a SKIP the
-        row normally already exists (same run_id ⇒ same census file); if it
-        does not — a store committed by pre-r5 code whose crash window this
-        ordering closes — it is backfilled from the committed table, unless
-        ``census_on_skip`` is False (censuses like the verify slack count
-        that are only observable while the stage computes)."""
+        stage always has its approximation census (ADVICE r4)."""
         if store.is_done(name):
-            if (
-                census is not None
-                and census_on_skip
-                and not store.has_census(census[0], spark)
-            ):
-                cname, fn = census
-                store.record_census(
-                    cname,
-                    fn(store.read(spark, name), store.manifest_rows(name)),
-                    spark,
-                )
             run.results.append(StageResult(name, -1, skipped=True))
             return store.read(spark, name)
         t0 = time.perf_counter()
@@ -137,17 +126,8 @@ def run_pipeline(
 
     def stage_async(name: str, compute, census=None) -> None:
         """``census`` follows the same census-before-manifest contract as
-        stage(): recorded inside store.write when the stage RAN; on a skip
-        the same-run_id census row normally already stands (backfilled from
-        the committed table when it does not — pre-r5 stores)."""
+        stage()."""
         if store.is_done(name):
-            if census is not None and not store.has_census(census[0], spark):
-                cname, fn = census
-                store.record_census(
-                    cname,
-                    fn(store.read(spark, name), store.manifest_rows(name)),
-                    spark,
-                )
             async_stages.append((name, StageResult(name, -1, skipped=True)))
             return
 
@@ -307,88 +287,68 @@ def run_pipeline(
         from dedup_spark.operators import hamming
 
         t_hamming = stage(
-            "t_hamming", lambda: hamming.hamming_family_pairs(t_salted, cfg=cfg)
+            "t_hamming", lambda: hamming.hamming_family_pairs(t_salted, cfg)
         )
 
         mh_salted = t_salted.where(F.col("family") == "minhash")
         t_cand = pairs_op.candidate_pairs(mh_salted)
 
+        @functools.cache
         def _containment():
-            pair_df, skipped = containment.containment_stage(t_sigs, cfg)
-            # durable census: anchor-gram groups dropped by the group cap —
-            # recorded by store.write before the nested stage's manifest, so a
-            # "done" nested stage always carries it (ADVICE r4)
-            stage(
-                "t_containment_skipped",
-                lambda: skipped,
-                census=("containment_skipped_groups", lambda out, rows: rows),
-            )
-            return pair_df
+            return containment.containment_stage(t_sigs, cfg)
 
-        t_contain = stage("t_containment", _containment)
-        if not any(
-            r.name == "t_containment_skipped" for r in run.results
-        ) and store.is_done("t_containment_skipped"):
-            # the nested stage only executes inside the parent's compute, so on
-            # a resume it never reaches run.results even though it exists in the
-            # store and was skipped — record the skip so resume reports are
-            # faithful (ADVICE r3). Its census row normally stands (same
-            # run_id); backfill from the manifest when it does not — the
-            # nested stage() call above never runs on this path, so its own
-            # skip-backfill cannot fire (ADVICE r4 legacy-store window).
-            if not store.has_census("containment_skipped_groups", spark):
-                store.record_census(
-                    "containment_skipped_groups",
-                    store.manifest_rows("t_containment_skipped"),
-                    spark,
-                )
-            run.results.append(StageResult("t_containment_skipped", -1, skipped=True))
+        # durable census: anchor-gram groups dropped by the group cap —
+        # recorded by store.write before the stage's manifest, so a "done"
+        # stage always carries it (ADVICE r4)
+        stage(
+            "t_containment_skipped",
+            lambda: _containment()[1],
+            census=("containment_skipped_groups", lambda out, rows: rows),
+        )
+        t_contain = stage("t_containment", lambda: _containment()[0])
 
+        # durable census: captioned pairs the simhash slack gate kept away
+        # from the exact-Jaccard verify, in round one and in the rescue round.
+        # verify_pairs fills slack_census EAGERLY (the count runs inside the
+        # compute), so the value is ready when store.write's census hook fires.
         slack_census: dict[str, int] = {}
-        t_verified = stage(
-            "t_verified",
-            lambda: verify.verify_pairs(
+
+        def _verified():
+            round1 = verify.verify_pairs(
                 pairs_op.union_pairs(t_cand, t_contain), t_sigs, cfg,
                 census=slack_census,
-            ),
-            # durable census: captioned pairs the simhash slack gate kept away
-            # from the exact-Jaccard verify. verify_pairs fills slack_census
-            # EAGERLY (the count runs inside the compute), so the value is ready
-            # when store.write's census hook fires; it is NOT recomputable from
-            # the committed output, hence census_on_skip=False.
-            census=(
-                "verify_slack_skips",
-                lambda out, rows: slack_census.get("slack_skips", 0),
-            ),
-            census_on_skip=False,
-        )
-
-        # orphan rescue (see operators.pairs): minhash-bucketed rows with
-        # candidates but zero links anywhere get one capped exhaustive round.
-        # "Judged" = verify output + hamming pairs + exact edges, so rows linked
-        # by ANY family are not orphans and already-found pairs aren't redone.
-        def _judged():
+            ).localCheckpoint()  # consumed twice: rescue input + output
+            # orphan rescue (see operators.pairs): minhash-bucketed rows with
+            # candidates but zero links anywhere get one capped exhaustive
+            # round. "Judged" = round one + hamming pairs + exact edges, so
+            # rows linked by ANY family are not orphans and already-found
+            # pairs aren't redone.
             true_col = F.lit(True).alias("verified")
-            return (
-                t_verified.select("a", "b", "verified")
+            judged = (
+                round1.select("a", "b", "verified")
                 .unionByName(t_hamming.select("a", "b", true_col))
                 .unionByName(t_exact_edges.select("a", "b", true_col))
             )
-
-        t_rescued = stage(
-            "t_rescued",
-            lambda: verify.rescue_verify_pairs(
+            rescued = verify.rescue_verify_pairs(
                 pairs_op.orphan_rescue_pairs(
-                    mh_salted, _judged(), node_ids=t_sigs.select("image_id")
+                    mh_salted, judged, t_sigs.select("image_id")
                 ),
-                t_sigs, cfg,
+                t_sigs, cfg, census=slack_census,
+            )
+            return round1.unionByName(rescued)
+
+        t_verified = stage(
+            "t_verified",
+            _verified,
+            census=(
+                "verify_slack_skips",
+                lambda out, rows: slack_census.get("slack_skips", 0),
             ),
         )
 
         def _edges():
             return (
                 verify.verified_edges(t_verified)
-                .unionByName(verify.verified_edges(t_rescued))
                 .unionByName(t_hamming.select("a", "b"))
                 .unionByName(t_exact_edges.select("a", "b"))
                 .unionByName(t_contain.select("a", "b"))
@@ -425,11 +385,4 @@ def run_pipeline(
     return run
 
 
-def cluster_table(spark: SparkSession, store_root: str) -> DataFrame:
-    """Convenience: read the final cluster assignment of a finished run."""
-    return spark.read.parquet(f"{store_root}/t_winners")
-
-
-__all__ = ["run_pipeline", "PipelineRun", "cluster_table"]
-
-_ = F  # imported for future per-stage expressions
+__all__ = ["run_pipeline", "PipelineRun"]

@@ -12,10 +12,12 @@ Two backends behind one interface:
   (no Iceberg jar on disk, SURVEY.md §7.0). A stage is "done" iff its
   manifest exists and its config fingerprint matches.
 
-Both record lineage rows (stage, run_id, fingerprint, status, rows) and
-per-partition metrics (stage, partition_id, rows) — metrics are computed
-from the MATERIALIZED output via spark_partition_id so they cost one cheap
-scan of already-columnar data, never a recompute of the stage.
+Both share one commit sequence (data → metrics → census → manifest →
+lineage) and record lineage rows (stage, run_id, fingerprint, status, rows)
+and per-partition metrics (stage, partition_id, rows) — read from the
+committed parquet footers (Iceberg: one aggregate over the committed
+snapshot), never a recompute of the stage. The store root is a LOCAL
+directory: manifests, lineage and censuses are plain files under it.
 """
 
 from __future__ import annotations
@@ -46,6 +48,13 @@ class StageResult:
 
 class ParquetStore:
     def __init__(self, root: str, run_id: str, fingerprint: str):
+        # manifests, lineage and censuses are plain local files; a URI root
+        # would split them into a CWD-relative "s3:/…" tree while Spark
+        # writes the data to the real URI, so a resume elsewhere finds none
+        if "://" in root:
+            raise ValueError(
+                f"store root must be a local directory, not a URI: {root!r}"
+            )
         self.root = root
         self.run_id = run_id
         self.fingerprint = fingerprint
@@ -80,20 +89,19 @@ class ParquetStore:
         implies census-present, so a driver crash between the data commit and
         the census can never leave a resumable stage whose approximation
         accounting is permanently missing."""
-        path = self._table_dir(name)
-        df.write.mode("overwrite").parquet(path)
-        spark = df.sparkSession
-        out = spark.read.parquet(path)
+        extra = self._write_data(name, df)
+        out = self.read(df.sparkSession, name)
         rows = self._write_metrics(name, out)
         if census is not None:
             cname, fn = census
-            self.record_census(cname, fn(out, rows), spark)
+            self.record_census(cname, fn(out, rows))
         manifest = {
             "stage": name,
             "run_id": self.run_id,
             "fingerprint": self.fingerprint,
             "status": "done",
             "rows": rows,
+            **extra,
         }
         # atomic rename so a crash mid-write can never look "done"
         fd, tmp = tempfile.mkstemp(dir=self.root, suffix=".manifest.tmp")
@@ -103,10 +111,10 @@ class ParquetStore:
         self._append_lineage(manifest)
         return StageResult(name, rows, skipped=False)
 
-    def manifest_rows(self, name: str) -> int:
-        """Committed row count of a done stage (from its manifest)."""
-        with open(self._manifest(name)) as f:
-            return int(json.load(f).get("rows", -1))
+    def _write_data(self, name: str, df: DataFrame) -> dict:
+        """Commit the stage's rows; returns extra manifest fields."""
+        df.write.mode("overwrite").parquet(self._table_dir(name))
+        return {}
 
     def read(self, spark: SparkSession, name: str) -> DataFrame:
         return spark.read.parquet(self._table_dir(name))
@@ -117,61 +125,29 @@ class ParquetStore:
         with _LINEAGE_LOCK, open(path, "a") as f:
             f.write(json.dumps(manifest) + "\n")
 
-    def record_census(self, name: str, value: int, spark=None) -> None:
+    def record_census(self, name: str, value: int) -> None:
         """One approximation-census row per run into t_metrics (VERDICT r3
         #5): salting loss, verify slack-gate skips, containment skipped
         groups. Logged censuses vanish with the driver; a metrics row
-        survives resume/remote runs, so the recall accounting is durable.
-        Schema matches the per-partition metrics rows (partition_id -1 marks
-        a run-level census)."""
+        survives resume, so the recall accounting is durable. Schema matches
+        the per-partition metrics rows (partition_id -1 marks a run-level
+        census); the fixed per-(census, run_id) file name makes a rewrite
+        idempotent."""
         import pyarrow as pa
         import pyarrow.parquet as pq
 
         stage = f"census_{name}"
         mdir = os.path.join(self.root, "t_metrics")
-        if os.path.isdir(self.root):
-            os.makedirs(mdir, exist_ok=True)
-            tbl = pa.table(
-                {
-                    "partition_id": pa.array([-1], pa.int32()),
-                    "rows_out": pa.array([int(value)], pa.int64()),
-                    "stage": pa.array([stage]),
-                    "run_id": pa.array([self.run_id]),
-                }
-            )
-            pq.write_table(tbl, os.path.join(mdir, f"{stage}-{self.run_id}.parquet"))
-            return
-        if spark is None:  # non-local root needs a session to append
-            raise ValueError("record_census on a non-local root requires spark")
-        spark.createDataFrame(
-            [(-1, int(value), stage, self.run_id)],
-            "partition_id int, rows_out long, stage string, run_id string",
-        ).write.mode("append").parquet(mdir)
-
-    def has_census(self, name: str, spark: SparkSession | None = None) -> bool:
-        """Whether this run's census row for ``name`` is already durable.
-        Used by the resume path to backfill censuses for stores committed
-        by older code, where the manifest could predate the census row
-        (ADVICE r4 crash window — closed going forward by write() ordering)."""
-        stage = f"census_{name}"
-        mdir = os.path.join(self.root, "t_metrics")
-        if os.path.isdir(self.root):
-            return os.path.exists(
-                os.path.join(mdir, f"{stage}-{self.run_id}.parquet")
-            )
-        if spark is None:
-            return False
-        try:
-            return bool(
-                spark.read.parquet(mdir)
-                .where(
-                    (F.col("stage") == stage) & (F.col("run_id") == self.run_id)
-                )
-                .limit(1)
-                .count()
-            )
-        except Exception:
-            return False
+        os.makedirs(mdir, exist_ok=True)
+        tbl = pa.table(
+            {
+                "partition_id": pa.array([-1], pa.int32()),
+                "rows_out": pa.array([int(value)], pa.int64()),
+                "stage": pa.array([stage]),
+                "run_id": pa.array([self.run_id]),
+            }
+        )
+        pq.write_table(tbl, os.path.join(mdir, f"{stage}-{self.run_id}.parquet"))
 
     def lineage(self) -> list[dict]:
         path = os.path.join(self.root, "t_lineage.jsonl")
@@ -185,23 +161,15 @@ class ParquetStore:
         FOOTERS — driver-side file metadata reads, zero Spark jobs. A
         metrics job per stage (~1-2s each) was a large share of the
         pipeline's fixed overhead; the footers carry the same per-file
-        (= per-partition) row counts the job would compute.
-
-        The footer fast path only works when the store root is a LOCAL
-        directory; for object-store roots (--store-root s3://…) the glob
-        would silently return nothing and record rows=0, so fall back to
-        the Spark-side aggregate used by IcebergStore."""
+        (= per-partition) row counts the job would compute."""
         import glob as _glob
 
         import pyarrow as pa
         import pyarrow.parquet as pq
 
-        tdir = self._table_dir(name)
-        if not os.path.isdir(tdir):
-            return self._spark_metrics(name, out)
         files = sorted(
             f
-            for f in _glob.glob(os.path.join(tdir, "part-*"))
+            for f in _glob.glob(os.path.join(self._table_dir(name), "part-*"))
             if not f.endswith(".crc")
         )
         rows = [pq.read_metadata(f).num_rows for f in files]
@@ -219,8 +187,8 @@ class ParquetStore:
         return int(sum(rows))
 
     def _spark_metrics(self, name: str, out: DataFrame) -> int:
-        """One Spark aggregate over the committed table — works on any
-        filesystem (the fallback for non-local roots and Iceberg)."""
+        """One Spark aggregate over the committed table (Iceberg tables
+        have no local part-files to read footers from)."""
         m = (
             out.groupBy(F.spark_partition_id().alias("partition_id"))
             .agg(F.count("*").alias("rows_out"))
@@ -239,46 +207,25 @@ class ParquetStore:
 class IcebergStore(ParquetStore):
     """Iceberg-backed variant: stage tables become real Iceberg tables.
 
-    Inherits manifest/lineage bookkeeping; the data path switches to
-    ``writeTo().createOrReplace()`` so every stage commit is an Iceberg
-    snapshot (atomic, time-travelable). Only usable when the session has the
-    Iceberg runtime (not this sandbox — SURVEY.md §7.0)."""
+    Inherits the commit sequence (metrics → census → manifest → lineage);
+    only the data write/read switch to ``writeTo().createOrReplace()`` so
+    every stage commit is an Iceberg snapshot (atomic, time-travelable).
+    Only usable when the session has the Iceberg runtime (not this sandbox
+    — SURVEY.md §7.0)."""
 
     def __init__(self, catalog_ns: str, root: str, run_id: str, fingerprint: str):
         super().__init__(root, run_id, fingerprint)
         self.catalog_ns = catalog_ns
 
-    def write(self, name: str, df: DataFrame,
-              census: tuple | None = None) -> StageResult:
+    def _write_data(self, name: str, df: DataFrame) -> dict:
         tbl = f"{self.catalog_ns}.{name}"
         df.writeTo(tbl).createOrReplace()
-        spark = df.sparkSession
-        out = spark.read.table(tbl)
-        rows = self._write_metrics(name, out)
-        if census is not None:  # same census-before-manifest contract
-            cname, fn = census
-            self.record_census(cname, fn(out, rows), spark)
-        manifest = {
-            "stage": name,
-            "run_id": self.run_id,
-            "fingerprint": self.fingerprint,
-            "status": "done",
-            "rows": rows,
-            "table": tbl,
-        }
-        fd, tmp = tempfile.mkstemp(dir=self.root, suffix=".manifest.tmp")
-        with os.fdopen(fd, "w") as f:
-            json.dump(manifest, f)
-        os.replace(tmp, self._manifest(name))
-        self._append_lineage(manifest)
-        return StageResult(name, rows, skipped=False)
+        return {"table": tbl}
 
     def read(self, spark: SparkSession, name: str) -> DataFrame:
         return spark.read.table(f"{self.catalog_ns}.{name}")
 
     def _write_metrics(self, name: str, out: DataFrame) -> int:
-        """Iceberg tables have no local part-files; compute the partition
-        metrics with one Spark aggregate over the committed snapshot."""
         return self._spark_metrics(name, out)
 
 

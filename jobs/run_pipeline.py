@@ -6,8 +6,11 @@ Cluster launch:
     spark-submit --py-files dedup_spark.zip \
         --num-executors 64 --executor-cores 4 --executor-memory 16g \
         jobs/run_pipeline.py \
-        --input iceberg_catalog.db.images --store-root s3://bucket/dedup_runs/r1 \
+        --input iceberg_catalog.db.images --store-root /mnt/shared/dedup_runs/r1 \
         --run-id r1
+
+The store root is a directory every node of the job mounts (local disk or a
+shared filesystem); URI roots such as s3://… are rejected (sources.store).
 
 Sandbox / local run (no Iceberg jar, SURVEY.md §7.0):
 
@@ -42,7 +45,7 @@ def main(argv: list[str] | None = None) -> int:
                      help="generate a deterministic synthetic images table of N rows")
     p.add_argument("--seed", type=int, default=1337, help="synthetic-source seed")
     p.add_argument("--store-root", required=True,
-                   help="stage-store root (dir / object-store prefix)")
+                   help="stage-store root (a mounted directory, not a URI)")
     p.add_argument("--run-id", default=None, help="resume key (default: random)")
     p.add_argument("--master", default=None,
                    help="override master (spark-submit usually sets this)")

@@ -8,6 +8,7 @@ import networkx as nx
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
+from dedup_spark.config import PipelineConfig
 from dedup_spark.operators.hamming import _bucket_edges, hamming_family_pairs
 
 
@@ -68,7 +69,7 @@ def test_hamming_family_pairs_spark(spark):
         for i in range(n)
     ]
     df = spark.createDataFrame(pd.DataFrame(rows))
-    out = hamming_family_pairs(df, {"simhash": 8}).toPandas()
+    out = hamming_family_pairs(df, PipelineConfig(simhash_hamming_max=8)).toPandas()
     g = nx.Graph()
     g.add_edges_from(zip(out.a, out.b))
     comp = {frozenset(c) for c in nx.connected_components(g) if len(c) > 1}
@@ -146,6 +147,6 @@ def test_planted_hot_bucket_bounded_memory(spark):
     assert rep.fanout[0] >= n // DEFAULT_CONFIG.bucket_cap
     sizes = salted.groupBy("salt").count().toPandas()["count"]
     assert sizes.max() <= DEFAULT_CONFIG.bucket_cap * 3  # ≈ cap, hash jitter
-    out = hamming_family_pairs(salted, {"simhash": 8})
+    out = hamming_family_pairs(salted, PipelineConfig(simhash_hamming_max=8))
     # every sub-bucket is a near-clique of the planted base → ~n-fanout edges
     assert out.count() > n * 0.9

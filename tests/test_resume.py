@@ -101,46 +101,6 @@ def test_lineage_and_metrics_written(spark, first_run):
     assert (census.rows_out >= 0).all()
 
 
-def test_census_backfill_on_skip(spark, tmp_path):
-    """ADVICE r4: censuses are now written BEFORE the stage manifest, so
-    'done' implies census-present for new stores. For stores committed by
-    older code (census after manifest — a crash window), the skip path
-    backfills a missing census from the committed table. Simulate the
-    legacy hole by deleting the census rows of a done store and resuming.
-    (Own store: the module fixture's store is rewritten under another
-    run_id by the config-change test, so skips there are order-dependent.)"""
-    root = str(tmp_path / "census_store")
-    images = gen_images(spark, 120, 7)
-    run_pipeline(spark, images, root, run_id="cb")
-    mdir = os.path.join(root, "t_metrics")
-    restorable = [
-        "census_salting_lost_pairs-cb.parquet",
-        "census_containment_skipped_groups-cb.parquet",
-    ]
-    before = spark.read.parquet(mdir).toPandas()
-    before = dict(
-        zip(before[before.partition_id == -1].stage,
-            before[before.partition_id == -1].rows_out)
-    )
-    for fname in restorable:
-        os.remove(os.path.join(mdir, fname))
-
-    run = run_pipeline(spark, images, root, run_id="cb")
-    assert all(r.skipped for r in run.results)
-
-    after = spark.read.parquet(mdir).toPandas()
-    after = dict(
-        zip(after[after.partition_id == -1].stage,
-            after[after.partition_id == -1].rows_out)
-    )
-    for fname in restorable:
-        stage = fname.rsplit("-", 1)[0]
-        assert after[stage] == before[stage], stage
-    # the verify slack census is only observable while the stage computes
-    # (census_on_skip=False) — still present because we did not delete it
-    assert "census_verify_slack_skips" in after
-
-
 def test_sync_stage_failure_reaps_async_pool(spark, tmp_path, monkeypatch):
     """ADVICE r4: when a SYNCHRONOUS stage raises, the async diagnostic
     pool must be reaped before the exception propagates — its non-daemon

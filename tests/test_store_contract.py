@@ -1,9 +1,11 @@
 """StageStore contract coverage the sandbox can't get from a real Iceberg
 runtime (VERDICT r1 #6 / ADVICE r1): drive IcebergStore.write/read/
-_write_metrics against a stubbed writeTo/read.table, and pin the
-ParquetStore metrics fallback for non-local roots."""
+_write_metrics against a stubbed writeTo/read.table, and pin that URI store
+roots are rejected before anything is written."""
 
 from __future__ import annotations
+
+import pytest
 
 from dedup_spark.sources.store import IcebergStore, ParquetStore
 
@@ -45,15 +47,12 @@ def test_iceberg_store_write_read_metrics(spark, tmp_path, monkeypatch):
     assert lin and lin[-1]["stage"] == "t_x" and lin[-1]["rows"] == 17
 
 
-def test_parquet_metrics_fallback_for_nonlocal_root(spark, tmp_path):
-    # a non-local table dir (s3://…) can't be globbed for parquet footers;
-    # _write_metrics must fall back to the Spark aggregate, not record 0
-    store = ParquetStore(str(tmp_path), "r1", "fp1")
-    df = spark.range(23).selectExpr("cast(id as string) AS image_id")
-    orig = store._table_dir
-    store._table_dir = lambda name: f"s3://bucket/{name}"  # unreachable dir
-    rows = store._write_metrics("t_remote", df)
-    store._table_dir = orig
-    assert rows == 23
-    m = store.metrics(spark).toPandas()
-    assert m.loc[m.stage == "t_remote", "rows_out"].sum() == 23
+def test_uri_store_root_rejected_before_any_write(tmp_path, monkeypatch):
+    # manifests and lineage are local files: a URI root must fail up front,
+    # not create a CWD-relative "s3:/…" tree beside the real data
+    monkeypatch.chdir(tmp_path)
+    with pytest.raises(ValueError, match="local directory"):
+        ParquetStore("s3://bucket/runs/r1", "r1", "fp1")
+    with pytest.raises(ValueError, match="local directory"):
+        IcebergStore("dedup", "file:///tmp/runs/r1", "r1", "fp1")
+    assert list(tmp_path.iterdir()) == []
